@@ -52,6 +52,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import genstore
+
 __all__ = ["update_component_store", "read_components",
            "compact_component_store", "snapshot_component_store",
            "ComponentStoreSnapshot"]
@@ -65,13 +67,8 @@ def _merges_path(path: str) -> str:
     return f"{path}/merges"
 
 
-def _fs(spark: SparkSession, p: str):
-    jp = spark._jvm.org.apache.hadoop.fs.Path(p)
-    return jp.getFileSystem(spark._jsc.hadoopConfiguration()), jp
-
-
 def _exists(spark: SparkSession, p: str) -> bool:
-    fs, jp = _fs(spark, p)
+    fs, jp = genstore.fs(spark, p)
     return fs.exists(jp)
 
 
@@ -357,7 +354,7 @@ def compact_component_store(spark: SparkSession, path: str,
     future resolution maps. Returns the number of member rows written.
     The source store is untouched (swap directories at the catalog
     level, the standard metadata flip)."""
-    fs, jp = _fs(spark, out_path)
+    fs, jp = genstore.fs(spark, out_path)
     if fs.exists(jp) and len(fs.listStatus(jp)) > 0:
         raise ValueError(
             f"compact_component_store: out_path {out_path} is not empty "

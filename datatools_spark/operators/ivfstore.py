@@ -6,18 +6,13 @@ scan"); this module IS that layout, with the same incremental contract
 as the signature stores (sigstore.py): assign each vector to its cell
 once, append-only batches, searches read only probed cells.
 
-Layout: ``{path}/gen-N/centroids`` (the k cell centroids — the model)
-and ``{path}/gen-N/data`` partitioned by ``centroid_id``, where a
-generation is visible to readers only once its ``_COMMIT`` marker
-exists. A rebuild writes BOTH tables into a fresh generation and
-commits them atomically with the marker — without this, the old
-two-overwrite protocol had a torn-index crash window (data reflecting
-the NEW model under the OLD centroids: searches probe with geometry
-the assignments no longer match, silently losing recall; and a crash
-mid-overwrite destroyed the previous index outright). Same
-marker-gated pattern as the merge-store log and the KMV snapshots.
-Pre-generation stores (bare ``{path}/data``+``{path}/centroids``) are
-still readable; the first rebuild migrates them.
+Layout: one :mod:`genstore` generation per build, holding
+``centroids`` (the k cell centroids — the model) and ``data``
+partitioned by ``centroid_id``. A rebuild writes BOTH tables into a
+fresh generation and commits them together with one marker, so a
+crash never exposes data assigned under a new model beside the old
+centroids (searches would probe with geometry the assignments no
+longer match, silently losing recall).
 
 A search resolves its probe cells driver-side (model-sized centroid
 collect, like every kmeans/codebook sync in similarity.py) and scans
@@ -31,52 +26,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import genstore
 from .similarity import cosine_expr, ivf_assign
 
 __all__ = ["build_ivf_index", "update_ivf_index", "ivf_index_search",
            "ivf_index_stats"]
 
 
-def _fs(spark: SparkSession, p: str):
-    jp = spark._jvm.org.apache.hadoop.fs.Path(p)
-    return jp.getFileSystem(spark._jsc.hadoopConfiguration()), jp
-
-
-def _gen_numbers(spark: SparkSession, path: str,
-                 committed_only: bool) -> list[int]:
-    fs, jp = _fs(spark, path)
-    if not fs.exists(jp):
-        return []
-    gens = []
-    for st in fs.listStatus(jp):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("gen-"):
-            try:
-                n = int(name[4:])
-            except ValueError:
-                continue
-            # visible ⟺ the marker exists — a crashed build leaves a
-            # markerless orphan readers never resolve
-            if committed_only and not fs.exists(
-                    spark._jvm.org.apache.hadoop.fs.Path(
-                        f"{path}/{name}/_COMMIT")):
-                continue
-            gens.append(n)
-    return sorted(gens)
-
-
-def _committed_gens(spark: SparkSession, path: str) -> list[int]:
-    return _gen_numbers(spark, path, committed_only=True)
-
-
 def _resolve_root(spark: SparkSession, path: str) -> str:
     """Directory holding the live ``data``/``centroids`` pair: the
-    latest committed generation, or the bare path for pre-generation
-    stores."""
-    gens = _committed_gens(spark, path)
-    if gens:
-        return f"{path}/gen-{gens[-1]:06d}"
-    return path
+    latest committed generation."""
+    root = genstore.resolve(spark, path)
+    if root is None:
+        raise ValueError(f"no IVF index at {path} — build_ivf_index "
+                         "first")
+    return root
 
 
 def build_ivf_index(spark: SparkSession, df: DataFrame,
@@ -89,21 +53,15 @@ def build_ivf_index(spark: SparkSession, df: DataFrame,
     table also records each cell's BUILD-TIME mean cosine residual
     (``build_residual``) — the drift baseline :func:`ivf_index_stats`
     compares against (one extra scan of the at-rest data, no re-compute
-    of the assignment). Both tables land in a fresh generation made
-    visible by ONE ``_COMMIT`` marker after both writes succeed —
+    of the assignment). Both tables land in a fresh generation that
+    one commit marker makes visible after both writes succeed, so
     readers (search/stats/update) keep resolving the previous committed
-    generation through any crash of this build. Superseded generations
-    are pruned after the commit, RETAINING the previous committed one
-    (only older generations are deleted — the two-snapshot policy the
-    KMV/value-sample stores use): a reader that resolved its root just
-    before this rebuild committed (the streaming ingest loops resolve
-    per micro-batch) still finds its generation on disk; the next
+    generation through any crash of this build. The commit then retains
+    the previous generation for readers that resolved it just before
+    (the streaming ingest loops resolve per micro-batch); the next
     rebuild retires it. Returns the number of indexed vectors."""
-    gens = _committed_gens(spark, path)
-    # number past EVERY existing generation dir, committed or orphaned —
-    # never write into a crashed build's leftovers
-    all_gens = _gen_numbers(spark, path, committed_only=False)
-    gen = f"{path}/gen-{(all_gens[-1] + 1 if all_gens else 0):06d}"
+    n_gen = genstore.next_gen(spark, path)
+    gen = genstore.gen_path(path, n_gen)
     assigned = ivf_assign(df, centroids, vec_col, id_col, centroid_id_col,
                           keep_vec=True) \
         .select(F.col(id_col), F.col(vec_col), F.col(centroid_id_col))
@@ -121,29 +79,8 @@ def build_ivf_index(spark: SparkSession, df: DataFrame,
         .join(baseline, centroid_id_col, "left") \
         .write.mode("overwrite").parquet(f"{gen}/centroids")
     n = data.count()
-    fs, _ = _fs(spark, path)
-    fs.create(spark._jvm.org.apache.hadoop.fs.Path(
-        f"{gen}/_COMMIT")).close()
-    # prune superseded state only AFTER the new generation is live —
-    # and keep the MOST RECENT superseded generation (r7 ADVICE: the
-    # ingest loops resolve the root per micro-batch, so an immediate
-    # delete raced an in-flight reader of the just-retired generation
-    # into FileNotFound; one retained snapshot closes the window). A
-    # crash mid-prune leaves ignorable garbage, never a torn index.
-    for old in gens[:-1]:
-        fs.delete(spark._jvm.org.apache.hadoop.fs.Path(
-            f"{path}/gen-{old:06d}"), True)
-    # legacy bare tables follow the SAME retention policy as
-    # generations: on the migrating (first) build they are kept — an
-    # in-flight reader that resolved the bare root just before this
-    # commit is still scanning {path}/data, the exact race the
-    # retained-snapshot rule above closes — and are dropped on the
-    # next build, when no reader can still resolve them
-    if gens:
-        for legacy in ("data", "centroids"):
-            lp = spark._jvm.org.apache.hadoop.fs.Path(f"{path}/{legacy}")
-            if fs.exists(lp):
-                fs.delete(lp, True)
+    genstore.commit(spark, path, n_gen)
+    genstore.retain(spark, path)
     return n
 
 

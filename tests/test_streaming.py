@@ -658,7 +658,7 @@ def test_streaming_merge_store_apply_converges_and_prunes(spark, tmp_path):
     assert got[0] == 0 and len(got) == 1_000
     # copy-on-write held: the untouched upper-range base files survive
     live = merge_store_live_files(spark, root)
-    gen0 = [f for f in live if "/gen-0/" in f]
+    gen0 = [f for f in live if "/gen-000000/" in f]
     assert len(gen0) >= 2
 
     # replaying the same source through a FRESH checkpoint (the
@@ -928,8 +928,8 @@ def test_streaming_cms_restart_replays_uncommitted_batch_exactly_once(
     build of A ∪ B, and the ledger watermark advanced to 1."""
     import os
 
-    from datatools_spark.operators.sketches import (
-        _kmv_snapshots, cms_build, read_cms_store)
+    from datatools_spark.operators import genstore
+    from datatools_spark.operators.sketches import cms_build, read_cms_store
     from datatools_spark.streaming.demo import streaming_cms_ingest
 
     schema = "item string"
@@ -980,8 +980,8 @@ def test_streaming_cms_restart_replays_uncommitted_batch_exactly_once(
            for r in read_cms_store(spark, store).collect()}
     assert got == want  # replayed batch 0 skipped, batch 1 folded once
 
-    last = _kmv_snapshots(spark, store, prefix="cms-b")[-1]
-    state = spark.read.parquet(f"{store}/cms-b{last}/state").collect()
+    last = genstore.resolve(spark, store)
+    state = spark.read.parquet(f"{last}/state").collect()
     assert [(r["app_id"], r["last_id"]) for r in state] == [(ck, 1)]
 
 
